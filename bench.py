@@ -311,6 +311,28 @@ EXTRA = [
     "louvain_one_pass",
 ]
 
+# q6_forecast_revenue's r1 best-of-3 at sf0.1: the bracket control's
+# clean reading.
+CTL_BASELINE = 0.23
+
+
+def choose_pass(
+    passes: list[tuple[float, dict[str, float], float]],
+) -> tuple[int, str]:
+    """Index of the headline pass to report, and the rule that chose it.
+
+    A pass is clean when both bracket controls read <= 1.5x
+    CTL_BASELINE. The clean pass is reported; the lower total only
+    breaks ties (several clean passes, or none). Picking by total alone
+    is biased toward whichever pass the host noise happened to help.
+    """
+    clean = [
+        i for i, (c_s, _, c_e) in enumerate(passes)
+        if max(c_s, c_e) <= 1.5 * CTL_BASELINE
+    ]
+    i = min(clean or range(len(passes)), key=lambda i: sum(passes[i][1].values()))
+    return i, "clean_brackets" if clean else "min_total"
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -366,24 +388,21 @@ def main() -> None:
     # opened with control_start = 1.872 s (8x the 0.23 s baseline) and
     # every headline figure was unusable noise. If either bracket
     # control reads degraded (>1.5x baseline), cool down once and
-    # re-run the whole headline block; report the pass with the lower
-    # total and stamp BOTH passes' controls so the contamination (and
-    # the recourse taken) is on the record. Bounded: at most one rerun.
-    CTL_BASELINE = 0.23
+    # re-run the whole headline block, report the pass choose_pass
+    # picks and stamp BOTH passes' controls and the rule that chose,
+    # so the contamination (and the recourse taken) is on the record.
+    # Bounded: at most one rerun.
     ctl_start, timings, ctl_end = run_headline_pass()
     rerun_info = None
     if max(ctl_start, ctl_end) > 1.5 * CTL_BASELINE:
         time.sleep(30)  # cool-down: let a transient neighbor burst drain
-        ctl_start2, timings2, ctl_end2 = run_headline_pass()
-        pass1 = {"control_start": ctl_start, "control_end": ctl_end,
-                 "total": round(sum(timings.values()), 3)}
-        pass2 = {"control_start": ctl_start2, "control_end": ctl_end2,
-                 "total": round(sum(timings2.values()), 3)}
-        if sum(timings2.values()) < sum(timings.values()):
-            ctl_start, timings, ctl_end = ctl_start2, timings2, ctl_end2
-            rerun_info = {"reported": 2, "pass1": pass1, "pass2": pass2}
-        else:
-            rerun_info = {"reported": 1, "pass1": pass1, "pass2": pass2}
+        passes = [(ctl_start, timings, ctl_end), run_headline_pass()]
+        i, rule = choose_pass(passes)
+        rerun_info = {"reported": i + 1, "rule": rule}
+        for k, (c_s, t, c_e) in enumerate(passes, 1):
+            rerun_info[f"pass{k}"] = {"control_start": c_s, "control_end": c_e,
+                                      "total": round(sum(t.values()), 3)}
+        ctl_start, timings, ctl_end = passes[i]
 
     total = sum(timings.values())
 
@@ -425,7 +444,7 @@ def main() -> None:
         # window; the full rerun record stays in bench_extra.json.
         compact["protocol"] = dict(compact["protocol"])
         compact["protocol"]["load_rerun"] = {
-            "reported": rerun_info["reported"]}
+            "reported": rerun_info["reported"], "rule": rerun_info["rule"]}
         line = json.dumps(compact)
     assert len(line) < 1900, f"bench JSON line too long: {len(line)}"
     print(line)

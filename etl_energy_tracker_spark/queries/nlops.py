@@ -274,14 +274,14 @@ def nl_total_volume_by_market(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_DUCK_PRECIOS}
     SELECT datetime_utc, precio,
            ROUND(AVG(precio) OVER (PARTITION BY id_mercado
-               ORDER BY datetime_utc
+               ORDER BY datetime_utc, precio
                ROWS BETWEEN 24 PRECEDING AND CURRENT ROW), 2)
                AS rolling_avg_24h
     FROM precios
     WHERE id_mercado = 1
       AND datetime_utc >= TIMESTAMP '2024-01-05 00:00:00'
       AND datetime_utc < TIMESTAMP '2024-01-12 00:00:00' + INTERVAL 1 DAY
-    ORDER BY datetime_utc
+    ORDER BY datetime_utc, precio
     """,
     tags=("nl", "read", "window"),
     doc="NL→SQL template path, rolling-window form (VERDICT r11 task "
@@ -293,8 +293,9 @@ def nl_total_volume_by_market(spark: SparkSession, sf_dir: str) -> DataFrame:
     "246-252: 'window functions for running calculations instead of "
     "self-joins') — partitioned by id_mercado so the sort shuffles on "
     "the market key instead of collapsing to one global partition. "
-    "Ordering within the partition is unique (the view groups by "
-    "datetime_utc), so the frame is deterministic. Scale: pruned scan "
+    "The window orders by (datetime_utc, precio): a lake market can "
+    "hold several prices at one instant, and tied rows then carry "
+    "equal values, so the frame is deterministic. Scale: pruned scan "
     "+ one hash-partitioned window sort.",
 )
 def nl_rolling_avg_price_24(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1392,24 +1392,43 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver work inside the timed query, not result caching). Values
     # are bit-identical: sums are order-independent integers and
     # Python // matches Spark DIV on these non-negative operands.
+    # A source whose text is all NULL has NULL toks (size(split(NULL))
+    # is NULL under ANSI), so the arithmetic keeps the oracle's SQL
+    # NULL semantics: NULL operands and zero divisors give NULL, SUM
+    # skips NULLs, GREATEST(NULL, 1) is 1.
     rows = base.collect()
-    assert len(rows) <= 65536, (
-        f"doremi domain table unexpectedly large ({len(rows)} rows);"
-        " driver-side fixed point assumes a bounded domain space"
-    )
-    stats = [(r["source"], int(r["n_docs"]), int(r["toks"])) for r in rows]
-    t = sum(tk for _, _, tk in stats)
+    if len(rows) > 65536:
+        raise RuntimeError(
+            f"doremi domain table unexpectedly large ({len(rows)} rows);"
+            " driver-side fixed point assumes a bounded domain space"
+        )
+
+    def div(a, b):
+        return None if a is None or b is None or b == 0 else a // b
+
+    def mul(a, b):
+        return None if a is None or b is None else a * b
+
+    def total(xs):
+        xs = [x for x in xs if x is not None]
+        return sum(xs) if xs else None
+
+    def at_least_1(x):
+        return 1 if x is None else max(x, 1)
+
+    stats = [(r["source"], r["n_docs"], r["toks"]) for r in rows]
+    t = total(tk for _, _, tk in stats)
     cur = [
         # (source, n_docs, toks, loss_u, ref_ppm, a)
-        (s, nd, tk, tk * 1000000 // nd, tk * 1000000 // t, tk * 1000000 // t)
+        (s, nd, tk, div(mul(tk, 1000000), nd), div(mul(tk, 1000000), t), div(mul(tk, 1000000), t))
         for s, nd, tk in stats
     ]
     for _ in range(_DRM_ITERS):
-        avg_u = sum(a * loss_u for _, _, _, loss_u, _, a in cur) // 1000000
+        avg_u = div(total(mul(a, loss_u) for _, _, _, loss_u, _, a in cur), 1000000)
         raw = [
             (
                 s, nd, tk, loss_u, ref,
-                max((a * ((loss_u * 1000000) // max(avg_u, 1))) // 1000000, 1),
+                at_least_1(div(mul(a, div(mul(loss_u, 1000000), at_least_1(avg_u))), 1000000)),
             )
             for s, nd, tk, loss_u, ref, a in cur
         ]

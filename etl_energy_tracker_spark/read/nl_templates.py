@@ -145,14 +145,17 @@ def match_template(question: str) -> str | None:
     if rolling:
         # the reference prompt's window example, partitioned by market
         # (the question names exactly one) so the sort never collapses
-        # to a single global partition at scale
+        # to a single global partition at scale. A market can hold
+        # several values at one instant (the lake's dedup key includes
+        # the value), so the value breaks ties: tied rows then carry
+        # equal values and the ROWS frame is determinate.
         return (
             f"SELECT datetime_utc, {value}, "
             f"ROUND(AVG({value}) OVER (PARTITION BY id_mercado "
-            f"ORDER BY datetime_utc "
+            f"ORDER BY datetime_utc, {value} "
             f"ROWS BETWEEN 24 PRECEDING AND CURRENT ROW), 2) "
             f"AS rolling_avg_24h "
-            f"FROM {table} WHERE {where} ORDER BY datetime_utc"
+            f"FROM {table} WHERE {where} ORDER BY datetime_utc, {value}"
         )
     if by_market:
         return (

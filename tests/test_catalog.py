@@ -45,77 +45,33 @@ def test_catalog_is_populated():
     assert set(ORACLES) <= set(QUERIES)
 
 
-def _verified_frozensets() -> dict[str, frozenset]:
-    return {
-        attr: getattr(catalog, attr)
-        for attr in dir(catalog)
-        if attr.endswith("_VERIFIED") and isinstance(getattr(catalog, attr), frozenset)
-    }
-
-
-def test_priority_queue_names_resolve():
-    # a typo in the re-verification bookkeeping would silently reorder
-    # the driver's capped run — every queue name must be a real query
-    names = set(QUERIES)
-    assert set(catalog._PRIORITY) <= names
-    for attr, fs in _verified_frozensets().items():
-        assert fs <= names, attr
-    # and the ordering is a permutation of the catalog (no dupes/drops)
-    ordered = catalog._ordered()
-    assert sorted(ordered) == sorted(names)
-
-
-def test_verified_freeze_is_current():
-    """The round-close freeze ritual, mechanically enforced.
-
-    Rounds 4, 6 and 7 all ended with the newest CORRECTNESS greens
-    absent from the _RN_VERIFIED bookkeeping, so the next round's
-    capped (~50) driver run re-proved old rows instead of checking
-    never-verified queries (VERDICT r7 "What's wrong" §2). This test
-    fails until every green name in the NEWEST CORRECTNESS_r*.json is
-    frozen into some _RN_VERIFIED set — making the skip impossible.
-    """
+def test_ledger_is_consistent(tmp_path, monkeypatch):
+    """The verified-digest ledger names only catalog queries, the emit
+    order is a permutation of the catalog, and a query whose digest
+    differs from (or is missing in) the ledger is emitted first."""
     import json
-    import re
-    from pathlib import Path
 
-    repo = Path(__file__).resolve().parent.parent
-    runs = sorted(
-        repo.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    if not runs:
-        pytest.skip("no driver CORRECTNESS file yet")
-    newest = runs[-1]
-    rows = json.loads(newest.read_text())
-    greens = {
-        name
-        for name, row in rows.items()
-        if row.get("rows_match") and row.get("err") is None
-    }
-    frozen = frozenset().union(*_verified_frozensets().values())
-    missing = sorted(greens - frozen)
-    assert not missing, (
-        f"{newest.name} greens not frozen into any _RN_VERIFIED set "
-        f"(run the round-close freeze ritual): {missing}"
-    )
+    names = list(catalog.CATALOG)
+    assert set(json.loads(catalog.LEDGER.read_text())) <= set(names)
+    assert sorted(QUERIES) == sorted(names)
+    assert set(ORACLES) <= set(names)
 
-
-def test_frozen_names_pruned_from_priority():
-    """Freeze-without-prune loophole, closed (VERDICT r8 top_next §2).
-
-    _ordered() computes `verified - set(_PRIORITY)`, so a frozen name
-    left in _PRIORITY silently re-emits first and burns a slot of the
-    driver's ~50-row cap. A frozen name may sit in the queue ONLY via
-    _REVERIFY (impl changed after its green row — the documented,
-    dated rationale lives in the comment above that tuple).
-    """
-    frozen = frozenset().union(*_verified_frozensets().values())
-    stale = sorted((set(catalog._PRIORITY) - set(catalog._REVERIFY)) & frozen)
-    assert not stale, (
-        "frozen names in _PRIORITY without a _REVERIFY rationale "
-        f"(prune them or move to _REVERIFY with a dated comment): {stale}"
-    )
+    monkeypatch.setattr(catalog, "LEDGER", tmp_path / "verified.json")
+    catalog.mark_verified(names, [])
+    assert catalog.stale_names() == []
+    changed, new = names[-1], names[len(names) // 2]
+    ledger = json.loads(catalog.LEDGER.read_text())
+    ledger[changed] = "0" * 16
+    del ledger[new]
+    catalog.LEDGER.write_text(json.dumps(ledger))
+    assert catalog.stale_names() == [new, changed]
+    order = list(catalog.queries())
+    assert order[:2] == [new, changed]
+    assert sorted(order) == sorted(names)
+    assert list(catalog.oracle_sql())[:2] == [new, changed]
+    catalog.mark_verified([new], [changed])
+    assert catalog.stale_names() == [changed]
+    assert changed not in json.loads(catalog.LEDGER.read_text())
 
 
 # Fast-tier smoke set for the per-query build-and-run check: the

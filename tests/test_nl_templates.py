@@ -163,3 +163,38 @@ def test_topk_markets_branch():
     sql_es = match_template("top 5 mercados por precio")
     assert sql_es is not None
     assert "LIMIT 5" in sql_es and "FROM precios" in sql_es
+
+
+def test_rolling_average_ties_match_duckdb(spark):
+    # precios can hold several prices at one instant (its dedup key is
+    # datetime_utc, id_mercado, precio), so the rolling frame must not
+    # depend on how Spark or DuckDB happen to order tied rows
+    import duckdb
+    import pandas as pd
+
+    t0 = dt.datetime(2024, 3, 1)
+    rows = [
+        (t0 + dt.timedelta(minutes=15 * (i // 3)), 1, float((i * 37) % 101))
+        for i in range(120)
+    ]
+    sql = match_template("rolling 24h average price of Diario el 2024-03-01")
+    assert sql is not None and "ORDER BY datetime_utc, precio" in sql
+    con = duckdb.connect()
+    con.register(
+        "precios",
+        pd.DataFrame(rows[::-1], columns=["datetime_utc", "id_mercado", "precio"]),
+    )
+    want = sorted(con.sql(sql).fetchall())
+    assert len(want) == 120
+    df = spark.createDataFrame(
+        rows, "datetime_utc timestamp, id_mercado int, precio double"
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 3, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            df.repartition(n).createOrReplaceTempView("precios")
+            got = [tuple(r) for r in spark.sql(sql).collect()]
+            assert sorted(got) == want, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

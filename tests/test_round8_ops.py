@@ -172,6 +172,37 @@ def test_doremi_python_replay(spark):
     assert a[lo] <= ref[lo]
 
 
+@pytest.mark.parametrize("null_sources", ["'src0'", "source"])
+def test_doremi_all_null_text_matches_oracle(spark, tmp_path, null_sources):
+    """A source whose text is all NULL has NULL toks on both engines;
+    when every source is like that the token total is NULL too. Spark
+    must give the DuckDB oracle's rows, not raise."""
+    import duckdb
+
+    from etl_energy_tracker_spark.queries.catalog import CATALOG
+
+    con = duckdb.connect()
+    con.sql(
+        "COPY (SELECT * REPLACE (CASE WHEN source IN ("
+        f"{null_sources}) THEN NULL ELSE text END AS text) "
+        f"FROM read_parquet('{SF_DIR}/documents.parquet')) "
+        f"TO '{tmp_path}/documents.parquet' (FORMAT parquet)"
+    )
+    con.sql(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    want = {
+        r[0]: r for r in con.sql(CATALOG["doremi_domain_weights"].oracle).fetchall()
+    }
+    got = {
+        r.source: tuple(r)
+        for r in doremi_domain_weights(spark, str(tmp_path)).collect()
+    }
+    assert got == want
+    assert any(r[2] is None for r in got.values())
+
+
 # ------------------------------------------------- LSH parameter plan
 
 

@@ -5,6 +5,10 @@ same parquet tables, then compares row count, column names, and an
 order-insensitive value hash (rows sorted, columns sorted by name,
 values normalized to strings).
 
+Each run records its results in the catalog's verified-digest ledger
+(``catalog.mark_verified``): PASS and ROWS-ONLY names get their current
+digest, FAIL names lose their entry.
+
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
@@ -94,7 +98,9 @@ def main() -> int:
 
     qs = catalog.queries()
     oracles = catalog.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
+    passed: list[str] = []
+    failed: list[str] = []
+    n_rows_only = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -106,12 +112,13 @@ def main() -> int:
         except Exception:
             print(f"FAIL {name}: SPARK ERROR")
             traceback.print_exc()
-            n_fail += 1
+            failed.append(name)
             continue
         if name not in oracles:
             status = "ROWS-ONLY"
             ok = len(srows) >= 0
             n_rows_only += 1
+            passed.append(name)
             print(f"{status:9s} {name}: {len(srows)} rows  ({time.time()-t0:.1f}s)")
             continue
         try:
@@ -122,7 +129,7 @@ def main() -> int:
         except Exception:
             print(f"FAIL {name}: ORACLE ERROR")
             traceback.print_exc()
-            n_fail += 1
+            failed.append(name)
             continue
         problems = []
         unsafe = [
@@ -150,12 +157,14 @@ def main() -> int:
                     print(f"    duck-only:  {r}")
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}  ({time.time()-t0:.1f}s)")
-            n_fail += 1
+            failed.append(name)
         else:
             print(f"PASS {name}: {len(srows)} rows  ({time.time()-t0:.1f}s)")
-            n_pass += 1
-    print(f"\n{n_pass} pass / {n_fail} fail / {n_rows_only} rows-only")
-    return 1 if n_fail else 0
+            passed.append(name)
+    catalog.mark_verified(passed, failed)
+    n_pass = len(passed) - n_rows_only
+    print(f"\n{n_pass} pass / {len(failed)} fail / {n_rows_only} rows-only")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
