@@ -6,6 +6,8 @@ and the driver's t2 gate).
 
 from __future__ import annotations
 
+import json
+
 import duckdb
 import pytest
 
@@ -45,33 +47,56 @@ def test_catalog_is_populated():
     assert set(ORACLES) <= set(QUERIES)
 
 
-def test_ledger_is_consistent(tmp_path, monkeypatch):
-    """The verified-digest ledger names only catalog queries, the emit
-    order is a permutation of the catalog, and a query whose digest
-    differs from (or is missing in) the ledger is emitted first."""
-    import json
+@pytest.fixture
+def scratch_ledger(tmp_path, monkeypatch):
+    """A ledger outside the package that holds every catalog name at
+    its current digest."""
+    monkeypatch.setattr(catalog, "LEDGER", tmp_path / "verified.json")
+    catalog.mark_verified(list(catalog.CATALOG), [])
+    return catalog.LEDGER
 
+
+def test_priority_queue_names_resolve():
+    # a typo in the verified-digest ledger would silently reorder the
+    # driver's capped run: every name it holds, and every stale name
+    # emitted first, must be a real query
     names = list(catalog.CATALOG)
     assert set(json.loads(catalog.LEDGER.read_text())) <= set(names)
+    assert set(catalog.stale_names()) <= set(names)
+    # and the emit order is a permutation of the catalog (no dupes/drops)
     assert sorted(QUERIES) == sorted(names)
     assert set(ORACLES) <= set(names)
 
-    monkeypatch.setattr(catalog, "LEDGER", tmp_path / "verified.json")
-    catalog.mark_verified(names, [])
+
+def test_verified_freeze_is_current(scratch_ledger):
+    """tools/check_correctness.py freezes each green at its current
+    digest through mark_verified() and drops each failure, so the
+    ledger cannot fall behind the last check."""
+    names = list(catalog.CATALOG)
     assert catalog.stale_names() == []
-    changed, new = names[-1], names[len(names) // 2]
-    ledger = json.loads(catalog.LEDGER.read_text())
+    new, changed = names[len(names) // 2], names[-1]
+    catalog.mark_verified([], [new, changed])
+    ledger = json.loads(scratch_ledger.read_text())
+    assert new not in ledger and changed not in ledger
+    assert catalog.stale_names() == [new, changed]
+    catalog.mark_verified([changed], [])
+    assert catalog.stale_names() == [new]
+
+
+def test_frozen_names_pruned_from_priority(scratch_ledger):
+    """A verified name is never emitted before a stale one: a wrong or
+    missing digest puts exactly that name first, and the verified names
+    follow in registration order."""
+    names = list(catalog.CATALOG)
+    new, changed = names[len(names) // 2], names[-1]
+    ledger = json.loads(scratch_ledger.read_text())
     ledger[changed] = "0" * 16
     del ledger[new]
-    catalog.LEDGER.write_text(json.dumps(ledger))
+    scratch_ledger.write_text(json.dumps(ledger))
     assert catalog.stale_names() == [new, changed]
-    order = list(catalog.queries())
-    assert order[:2] == [new, changed]
-    assert sorted(order) == sorted(names)
+    rest = [n for n in names if n not in (new, changed)]
+    assert list(catalog.queries()) == [new, changed, *rest]
     assert list(catalog.oracle_sql())[:2] == [new, changed]
-    catalog.mark_verified([new], [changed])
-    assert catalog.stale_names() == [changed]
-    assert changed not in json.loads(catalog.LEDGER.read_text())
 
 
 # Fast-tier smoke set for the per-query build-and-run check: the

@@ -15,7 +15,7 @@ Steps (any failure → non-zero exit):
    way git would show — i.e. the regeneration is committed too.
 2. Re-snapshot physical plans (tools/plan_audit.py --snapshot at
    sf0.001) so tests/test_plan_regression.py gates on current plans.
-3. Run the catalog ledger-consistency test and the plan regression
+3. Run the catalog ledger tests and the plan regression
    test.
 4. Assert every query named in bench_extra.json (headline `queries` +
    `extra_queries`) appears in BASELINE.md — a first-bench figure the
@@ -68,7 +68,9 @@ def main() -> None:
     run([
         py, "-m", "pytest", "-q",
         "tests/test_catalog.py::test_catalog_is_populated",
-        "tests/test_catalog.py::test_ledger_is_consistent",
+        "tests/test_catalog.py::test_priority_queue_names_resolve",
+        "tests/test_catalog.py::test_verified_freeze_is_current",
+        "tests/test_catalog.py::test_frozen_names_pruned_from_priority",
         "tests/test_plan_regression.py",
     ])
     # 3b. both-SF rule (VERDICT r9 task 6): every stale name (new, or
